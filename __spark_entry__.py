@@ -43,16 +43,6 @@ def entry(spark: SparkSession) -> DataFrame:
 # queries
 # ---------------------------------------------------------------------------
 
-_IVF_CACHE: dict[str, str] = {}
-
-
-def _ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = _IVF_CACHE.setdefault(sf_dir, tempfile.mkdtemp(prefix="oasys_ivf_entry_"))
-    return vec.ivf_knn(spark, sf_dir, work_dir=work)
-
-
 def _decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination over a deterministic corpus split:
     train = doc_id % 10 != 3 scrubbed against eval = doc_id % 10 == 3
@@ -292,7 +282,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_hash_embeddings": embed.hash_embeddings,
         "asof_click_view": tmp.asof_click_view,
         "vec_knn_cosine": lambda s, d: vec.knn_bruteforce(s, d, metric="cosine"),
-        "vec_ivf_knn": _ivf_knn,
+        "vec_ivf_knn": vec.ivf_knn,
         "hard_negative_mining": vec.hard_negative_mining,
         "vec_golden_distance": vec.golden_distances,
         "vec_lsh_knn_indexed": vec.lsh_knn_indexed,

@@ -35,9 +35,10 @@ import math
 import os
 import uuid
 from contextlib import contextmanager
-from typing import Any, Iterable
+from typing import Any, Callable, Iterable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from py4j.protocol import Py4JError
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -160,6 +161,33 @@ def merge_metadata(row) -> dict[str, Any]:
         if m:
             out.update(m)
     return out
+
+
+def _hit(row) -> dict[str, Any]:
+    """One query result row as the ``{id, metadata, distance}`` dict."""
+    return {"id": row["id"], "metadata": merge_metadata(row), "distance": row["distance"]}
+
+
+class _Attached(NamedTuple):
+    """A query batch attached to candidate rows (``Database._attach``)."""
+
+    df: DataFrame
+    distance: Column  # exact distance from each row to its query
+    qtable: "Column | None"  # the query's flat ADC table (PQ tier)
+    query_id: Column
+    topk: Callable[[DataFrame, int, str], DataFrame]
+
+
+def _limit_topk(df: DataFrame, n: int, key: str) -> DataFrame:
+    """The ``n`` lowest-``key`` rows of a one-query frame, ties by id:
+    ``ORDER BY key, id LIMIT n`` (TakeOrderedAndProject)."""
+    return df.orderBy(F.col(key).asc_nulls_last(), F.col("id")).limit(n)
+
+
+def _window_topk(df: DataFrame, n: int, key: str) -> DataFrame:
+    """The ``n`` lowest-``key`` rows per ``query_id``, ties by id."""
+    w = Window.partitionBy("query_id").orderBy(F.col(key).asc_nulls_last(), F.col("id"))
+    return df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= n).drop("__rn")
 
 
 class Database:
@@ -1611,8 +1639,10 @@ class Database:
             for old in prev:
                 try:
                     old.unpersist()
-                except Exception:
-                    pass  # already released / context gone
+                except Py4JError:
+                    # the JVM refuses once the broadcast was destroyed or
+                    # the SparkContext stopped: nothing is left to release
+                    pass
         self._serving_bcs = [bc] if bc is not None else []
 
     def release_serving_broadcasts(self) -> None:
@@ -1631,255 +1661,14 @@ class Database:
         approx: str | None = None,
         rerank: int = 128,
     ) -> DataFrame:
-        """ANN top-k as a DataFrame ``(id, m_text, m_num, m_bool, distance)``
-        — the vector is excluded, like QueryResult
-        (/root/reference/src/cores/index.rs:8-18).
-
-        Plan shape (SURVEY.md §3.1): [partition-pruned] scan → distance
-        column (native zip_with/aggregate exprs) → radius + filter
-        predicates → ``ORDER BY distance LIMIT k`` which Catalyst executes
-        as TakeOrderedAndProject — the distributed equivalent of the
-        reference's bounded max-heap (/root/reference/src/cores/index.rs:201-213).
-        Filter is applied **before** top-k (pre-filtering semantics,
-        /root/reference/src/cores/index.rs:195-199).
-
-        ``approx="pq"`` (after ``index.pq.build_pq``) swaps the candidate
-        stage for ADC over the 4-byte ``pq_code`` column — the scan never
-        touches raw vectors — then exact-re-ranks the best ``rerank``
-        rows; pre-filter, radius, and probe-pruning semantics are
-        unchanged (the filter applies before the ADC cut, the radius to
-        the exact distances). Euclidean metric only.
-
-        ``approx="hnsw"`` (after ``index.hnsw.build_hnsw``) serves from
-        the persisted graph tier: every shard's graph beams
-        ``max(rerank, k)`` candidates (ef_search), then ONLY those ids
-        re-rank through the exact JVM distance path — output values
-        bit-match the exact query for shared ids. Serving is RESIDENT
-        (r8): the job fans out over shard ids and each worker memoizes
-        its decoded shard graphs keyed by the graph version, so
-        steady-state queries read no graph rows at all (first touch per
-        worker loads just that shard's parquet row groups). Euclidean
-        and cosine metrics (cosine via a unit-normalized graph — same
-        candidate order, exact re-rank unchanged). Radius applies to the
-        exact distances; ``probes`` is moot (candidates come from graph
-        edges, not cluster pruning). Metadata FILTERS compose via
-        post-filtering with DOUBLING expansion: graph traversal cannot
-        apply a predicate mid-beam, so a filtered query over-fetches
-        (4k), post-filters, and quadruples ef_search until k rows match
-        or the candidate set covers the whole graph — at which point
-        the answer is EXACT; a selective filter therefore degrades
-        toward brute force instead of silently under-filling k (the
-        reference's pre-filter contract holds at every stop). A graph
-        built before any record mutation
-        is refused as stale (see ``index.hnsw.load_hnsw_graph``)."""
-        vec = self._validate_dim(vector)
-        if k <= 0:
-            raise errors.InvalidArgumentError(
-                "k must be > 0 (/root/reference/src/cores/database.rs:321-325)"
-            )
-        qp = QueryParameters(
-            probes=probes if probes is not None else 32,
-            radius=radius if radius is not None else self._default_radius(),
-        )
-        pred = compile_filter(filter, MapLayout())
-
-        if approx == "hnsw":
-            if self.params.metric not in ("euclidean", "cosine"):
-                raise errors.InvalidArgumentError(
-                    "approx='hnsw' supports the euclidean and cosine "
-                    "metrics only"
-                )
-            from oasysdb_spark.index.hnsw import (
-                broadcast_queries,
-                hnsw_serving_state,
-                resident_candidates,
-            )
-
-            gpath, gshards, gtoken, gmeta = hnsw_serving_state(self)
-            if gmeta.get("metric", "euclidean") != self.params.metric:
-                raise errors.InvalidArgumentError(
-                    "HNSW graph was built for metric "
-                    f"{gmeta.get('metric', 'euclidean')!r}; run build_hnsw "
-                    f"to rebuild it for {self.params.metric!r}"
-                )
-            recs = self.records_df()
-            # cosine serves from a unit-normalized graph (build_hnsw):
-            # beam the NORMALIZED query (euclidean order ≡ cosine order
-            # on unit vectors); the exact re-rank below still runs the
-            # true metric expression on the raw records
-            qbeam = vec
-            if self.params.metric == "cosine":
-                qn = math.sqrt(sum(x * x for x in vec))
-                if qn > 0:
-                    qbeam = [float(x) / qn for x in vec]
-            # Filters compose with the graph tier via POST-filtering
-            # with DOUBLING expansion (r7): graph traversal can't honor
-            # a predicate, so a filtered query over-fetches (4k to
-            # start), post-filters, and quadruples ef until k rows
-            # match or ef covers the whole graph — at which point the
-            # candidate set is exhaustive and the answer EXACT. Bounded:
-            # ≤ log₄(n/k) re-searches — and with the r8 resident cache
-            # each rung re-beams WARM worker-local graphs instead of
-            # re-scanning the table; selective filters degrade toward
-            # brute force instead of silently under-filling k (the
-            # failure mode this branch used to refuse with an error).
-            # Tombstoned ids (tombstone_hnsw) drop at the records join;
-            # widening ef by their count keeps k fillable even if every
-            # dead id lands in the beam.
-            n_tomb = len(gmeta.get("tombstones", []))
-            ef = max(rerank, k) + n_tomb
-            n_total = None
-            if filter is not None:
-                ef = max(ef, 4 * k)
-                # the exhaustive-exact termination bound is over GRAPH
-                # nodes — live records PLUS tombstoned nodes still in
-                # the graph (capping at the live count could truncate
-                # the final beam below the shard's node count and break
-                # the "ef covers the graph ⇒ EXACT" guarantee — r8
-                # review finding); live+tombs over-approximates under
-                # cosine (zero-norm rows never enter the graph), which
-                # only means one extra rung, never a truncated one
-                n_total = recs.count() + n_tomb
-            # ONE broadcast per query, shared across every ladder rung
-            # (not one per rung), and the PREVIOUS query's broadcast is
-            # unpersisted — executor copies don't accumulate over a
-            # long-lived serving session (r8 ADVICE)
-            qb = broadcast_queries(self.spark, [(0, qbeam)])
-            self._track_serving_broadcast(qb)
-            while True:
-                cand = resident_candidates(
-                    self.spark,
-                    gpath,
-                    gshards,
-                    gtoken,
-                    ef_search=ef,
-                    id_type="string",
-                    qb=qb,
-                ).select(F.col("vec_id").alias("id"))
-                df = recs.join(F.broadcast(cand), "id")
-                if filter is None:
-                    break
-                df = df.where(pred)
-                if ef >= n_total or df.count() >= k:
-                    break
-                ef = min(n_total, ef * 4)
-            dist = const_distance(self.params.metric, vec)
-            out = df.withColumn("distance", dist)
-            if math.isfinite(qp.radius):
-                out = out.where(F.col("distance") <= F.lit(qp.radius))
-            else:
-                out = out.where(F.col("distance").isNotNull())
-            return (
-                out.orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-                .limit(k)
-                .select(
-                    "id",
-                    "m_text",
-                    "m_num",
-                    "m_bool",
-                    to_f32(F.col("distance")).alias("distance"),
-                )
-            )
-
-        df = self.records_df()
-        if self.is_indexed():
-            probe_ids = self._probe_cluster_ids(vec, qp.probes)
-            df = df.where(F.col("cluster_id").isin(probe_ids))
-
-        if approx is not None:
-            if approx != "pq":
-                raise errors.InvalidArgumentError(
-                    f"unknown approx mode {approx!r}; supported: 'pq', 'hnsw'"
-                )
-            if self.params.metric != "euclidean":
-                raise errors.InvalidArgumentError(
-                    "approx='pq' supports the euclidean metric only"
-                )
-            from oasysdb_spark.index.pq import (
-                adc_score_col,
-                adc_score_expr,
-                adc_table,
-                load_codebooks_meta,
-            )
-
-            meta = load_codebooks_meta(self)
-            if meta is None or "pq_code" not in df.columns:
-                raise errors.InvalidArgumentError(
-                    "PQ tier not built: call oasysdb_spark.index.pq.build_pq first"
-                )
-            books, residual, pq_rot = meta
-            # candidate stage reads CODES, never raw vectors: the scan
-            # schema is the row minus `embedding` (4-byte codes + the
-            # filter's metadata maps), so the top-`rerank` heap carries
-            # no vector payload; raw embeddings are fetched by a second
-            # id-equi-join scan for ONLY the rerank winners (broadcast —
-            # `rerank` rows by construction). Cluster pruning from the
-            # probe stage applies to both scans.
-            cand = df.drop("embedding").where(pred)
-            if residual:
-                # IVFADC: codes quantize embedding − centroid, so each
-                # probed cluster gets its own ADC table on q − centroid_c,
-                # shipped as a probes-row broadcast frame
-                if not self.is_indexed():
-                    raise errors.InvalidArgumentError(
-                        "residual PQ layout requires the IVF index it was "
-                        "built with: build_index before querying"
-                    )
-                import numpy as np
-
-                cmap = {c: np.asarray(v, dtype=np.float64) for c, v in self.centroid_rows()}
-                qarr = np.asarray(vec, dtype=np.float64)
-
-                def _resid_q(c):
-                    r = qarr - cmap[c]
-                    return r if pq_rot is None else r @ pq_rot
-
-                tab_df = tiny_df(
-                    self.spark,
-                    [
-                        (
-                            int(c),
-                            [float(x) for x in adc_table(_resid_q(c), books).ravel()],
-                        )
-                        for c in probe_ids
-                    ],
-                    "cluster_id int, __qtable array<double>",
-                )
-                cand = (
-                    cand.join(F.broadcast(tab_df), "cluster_id")
-                    .withColumn(
-                        "__adc", adc_score_col(F.col("__qtable"), int(books.shape[1]))
-                    )
-                    .drop("__qtable")
-                )
-            else:
-                import numpy as np
-
-                qv = np.asarray(vec, dtype=np.float64)
-                if pq_rot is not None:
-                    qv = qv @ pq_rot
-                cand = cand.withColumn("__adc", adc_score_expr(adc_table(qv, books)))
-            cand = (
-                cand.orderBy(F.col("__adc").asc_nulls_last(), F.col("id"))
-                .limit(max(rerank, k))
-                .drop("__adc")
-            )
-            df = df.select("id", "embedding").join(F.broadcast(cand), "id")
-            pred = F.lit(True)  # already applied before the ADC cut
-
-        dist = const_distance(self.params.metric, vec)
-        out = df.withColumn("distance", dist)
-        if math.isfinite(qp.radius):
-            out = out.where(F.col("distance") <= F.lit(qp.radius))
-        else:
-            out = out.where(F.col("distance").isNotNull())
-        out = (
-            out.where(pred)
-            .orderBy(F.col("distance").asc_nulls_last(), F.col("id"))
-            .limit(k)
-            .select("id", "m_text", "m_num", "m_bool", to_f32(F.col("distance")).alias("distance"))
-        )
-        return out
+        """ANN top-k of one vector as ``(id, m_text, m_num, m_bool,
+        distance)`` rows: the :meth:`_serve` pipeline on a one-vector
+        batch, without ``query_id``. It plans as ``ORDER BY distance, id
+        LIMIT k`` (TakeOrderedAndProject)."""
+        queries = [(0, self._validate_dim(vector))]
+        return self._serve(
+            queries, k, filter, probes, radius, approx, rerank
+        ).drop("query_id")
 
     def query(
         self,
@@ -1892,15 +1681,13 @@ class Database:
         rerank: int = 128,
     ) -> list[dict[str, Any]]:
         """Collect form of :meth:`query_df`: ascending-distance list of
-        ``{id, metadata, distance}`` dicts."""
+        ``{id, metadata, distance}`` dicts, the same list as
+        ``query_many([vector], ...).get(0, [])``."""
         rows = self.query_df(
             vector, k, filter=filter, probes=probes, radius=radius,
             approx=approx, rerank=rerank,
         ).collect()
-        return [
-            {"id": r["id"], "metadata": merge_metadata(r), "distance": r["distance"]}
-            for r in rows
-        ]
+        return [_hit(r) for r in rows]
 
     def query_many_df(
         self,
@@ -1912,374 +1699,34 @@ class Database:
         approx: str | None = None,
         rerank: int = 128,
     ) -> DataFrame:
-        """Batched multi-query ANN as ONE job — the amortized form of
-        :meth:`query_df` (the reference RPC is single-vector,
-        /root/reference/protos/database.proto:27; a client with a query
-        batch would loop it, paying per-query scan cost — here the whole
-        batch shares one scan).
-
-        ``queries`` is either a ``(query_id bigint, qvec array<float>)``
-        DataFrame or a plain list of vectors (auto-numbered 0..n-1).
-        Returns ``(query_id, id, m_text, m_num, m_bool, distance)`` rows,
-        top-``k`` per query by ascending distance.
-
-        Plan shape: broadcast the (small) query batch; when indexed, each
-        query explodes to its ``probes`` nearest clusters (the same
-        Arrow-batched assigner the similarity join uses) and the
-        candidate set is an EQUI-join on cluster_id against the
-        cluster-partitioned records table — Spark's dynamic partition
-        pruning skips unprobed partitions at scan time, the batched
-        analog of query_df's static ``isin`` pruning. Unindexed falls
-        back to scan × broadcast. Per-query top-k is one window over the
-        broadcast-joined candidates — no per-query jobs, no driver loop.
-
-        ``approx="pq"`` (after ``index.pq.build_pq``) batches the
-        memory-bounded tier too: each query row broadcasts with its own
-        flattened ADC table, the candidate stage scans codes without the
-        embedding column, a per-query window keeps the ``rerank`` best
-        by ADC, and one id-join fetches raw vectors for only those
-        winners before the exact top-k. Each query's result list equals
-        its standalone ``query(..., approx='pq')`` call.
-
-        ``approx="hnsw"`` (after ``index.hnsw.build_hnsw``) batches the
-        graph tier: the query batch BROADCASTS into the resident shard
-        tasks (r8 — decoded graphs memoized per worker by graph
-        version, no graph-table scan in steady state), every query
-        beams through each shard's adjacency, and the candidates
-        re-rank exactly. Same contract as the single-query hnsw path:
-        filters via batch-global doubling expansion (every query fills
-        k or the search goes exhaustive-exact), euclidean and cosine
-        metrics, stale graphs refused; each query's list equals its
-        standalone ``query(..., approx='hnsw')`` call."""
-        if k <= 0:
-            raise errors.InvalidArgumentError(
-                "k must be > 0 (/root/reference/src/cores/database.rs:321-325)"
-            )
-        # qvec stays DOUBLE on both input paths so the batched distance
-        # arithmetic is bit-identical to query_df's double literals —
-        # an f32-cast query can swap near-tie results vs N single calls
-        qvec_rows: "list[tuple[int, list[float]]] | None" = None
-        if not isinstance(queries, DataFrame):
-            vecs = [self._validate_dim(v) for v in queries]
-            qvec_rows = list(enumerate(vecs))
-            # one slice, not defaultParallelism pickled slices (r16,
-            # guide §5 — the batch is broadcast-sized by contract)
-            queries = tiny_df(
-                self.spark, qvec_rows, "query_id bigint, qvec array<double>"
-            )
-        else:
-            queries = queries.select(
-                F.col("query_id").cast("bigint").alias("query_id"),
-                F.col("qvec").cast("array<double>").alias("qvec"),
-            )
-            # same dimension contract as the list branch / single query
-            # (/root/reference/src/cores/database.rs:189-199) — without
-            # this, a wrong-dim qvec row nulls out of zip_with and
-            # silently returns zero hits. The batch is broadcast-sized
-            # by contract, so the probe count() is cheap.
-            n_bad = queries.where(
-                F.col("qvec").isNull()
-                | (F.size("qvec") != F.lit(self.params.dimension))
-            ).count()
+        """Batched ANN as ONE Spark job: ``(query_id, id, m_text, m_num,
+        m_bool, distance)`` rows, top-``k`` per query (the reference RPC
+        is single-vector, reference protos/database.proto:27; here
+        the whole batch shares one scan). ``queries`` is a ``(query_id
+        bigint, qvec array<float>)`` DataFrame, collected to the driver
+        (the batch is broadcast-sized by contract), or a list of vectors
+        numbered 0..n-1. Each query's rows equal its standalone
+        :meth:`query_df`; see :meth:`_serve` for the pipeline."""
+        if isinstance(queries, DataFrame):
+            # qvec stays DOUBLE, like the list form's floats, so the
+            # distances bit-match the single query's double literals
+            rows = queries.select(
+                F.col("query_id").cast("bigint"),
+                F.col("qvec").cast("array<double>"),
+            ).collect()
+            # same dimension contract as the list form
+            # (reference src/cores/database.rs:189-199): a wrong-dim
+            # qvec would null out of zip_with and silently return no hits
+            n_bad = sum(q is None or len(q) != self.params.dimension for _, q in rows)
             if n_bad:
                 raise errors.InvalidArgumentError(
                     f"{n_bad} query vector(s) missing or not of dimension "
                     f"{self.params.dimension}"
                 )
-        n_probes = probes if probes is not None else 32
-        qp = QueryParameters(
-            probes=n_probes,
-            radius=radius if radius is not None else self._default_radius(),
-        )
-        pred = compile_filter(filter, MapLayout())
-
-        recs = self.records_df()
-
-        if approx == "hnsw":
-            # batched graph tier: the broadcast query batch beams
-            # through each shard's RESIDENT adjacency (worker-memoized
-            # by graph version — no graph scan in steady state), then
-            # the candidate (query_id, id) rows join back for the exact
-            # re-rank — same contract as the single-query hnsw branch
-            # (euclidean/cosine, stale graph refused; filters compose via
-            # the same post-filter + doubling expansion, batch-global:
-            # ef quadruples until EVERY query has ≥ k matched rows or
-            # the whole graph is candidates, so a selective filter
-            # degrades to exact instead of under-filling any query)
-            if self.params.metric not in ("euclidean", "cosine"):
-                raise errors.InvalidArgumentError(
-                    "approx='hnsw' supports the euclidean and cosine "
-                    "metrics only"
-                )
-            from oasysdb_spark.index.hnsw import (
-                broadcast_queries,
-                hnsw_serving_state,
-                resident_candidates,
-            )
-
-            gpath, gshards, gtoken, gmeta = hnsw_serving_state(self)
-            if gmeta.get("metric", "euclidean") != self.params.metric:
-                raise errors.InvalidArgumentError(
-                    "HNSW graph was built for metric "
-                    f"{gmeta.get('metric', 'euclidean')!r}; run build_hnsw "
-                    f"to rebuild it for {self.params.metric!r}"
-                )
-            if qvec_rows is None:  # DataFrame input: one collect (tiny batch)
-                qvec_rows = [
-                    (r["query_id"], list(r["qvec"])) for r in queries.collect()
-                ]
-            # cosine: beam NORMALIZED queries through the unit-vector
-            # graph; the exact re-rank keeps the raw qvec column
-            beam_rows = qvec_rows
-            if self.params.metric == "cosine":
-                beam_rows = []
-                for qid, qv in qvec_rows:
-                    qn = math.sqrt(sum(x * x for x in qv))
-                    beam_rows.append(
-                        (qid, [float(x) / qn for x in qv])
-                        if qn > 0
-                        else (qid, list(qv))
-                    )
-            # tombstoned ids drop at the records join — widen ef so a
-            # beam full of dead ids can never under-fill any query's k
-            n_tomb = len(gmeta.get("tombstones", []))
-            ef = max(rerank, k) + n_tomb
-            n_total = None
-            if filter is not None:
-                ef = max(ef, 4 * k)
-                # exhaustiveness bound = GRAPH nodes (live + tombstoned),
-                # not live records — see query_df's hnsw branch
-                n_total = recs.count() + n_tomb
-            # one broadcast for the whole batch, shared across ladder
-            # rungs; the previous batch's broadcast unpersists (r8 ADVICE)
-            qb = broadcast_queries(self.spark, beam_rows)
-            self._track_serving_broadcast(qb)
-            while True:
-                cand = resident_candidates(
-                    self.spark,
-                    gpath,
-                    gshards,
-                    gtoken,
-                    ef_search=ef,
-                    id_type="string",
-                    qb=qb,
-                ).select("query_id", F.col("vec_id").alias("id"))
-                cand = cand.join(F.broadcast(queries), "query_id")
-                pairs = recs.join(F.broadcast(cand), "id")
-                if filter is None:
-                    break
-                pairs = pairs.where(pred)
-                if ef >= n_total:
-                    break
-                matched = pairs.groupBy("query_id").count().collect()
-                got = {r["query_id"]: r["count"] for r in matched}
-                if all(got.get(qid, 0) >= k for qid, _ in qvec_rows):
-                    break
-                ef = min(n_total, ef * 4)
-            dist = distance_expr(
-                self.params.metric, F.col("qvec"), F.col("embedding")
-            )
-            out = pairs.withColumn("distance", dist)
-            if math.isfinite(qp.radius):
-                out = out.where(F.col("distance") <= F.lit(qp.radius))
-            else:
-                out = out.where(F.col("distance").isNotNull())
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("distance").asc_nulls_last(), F.col("id")
-            )
-            return (
-                out.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") <= k)
-                .select(
-                    "query_id",
-                    "id",
-                    "m_text",
-                    "m_num",
-                    "m_bool",
-                    to_f32(F.col("distance")).alias("distance"),
-                )
-            )
-
-        adc_k = None
-        pq_residual = False
-        if approx is not None:
-            # batched PQ: each query row carries its own flattened ADC
-            # table (computed driver-side — the batch is broadcast-sized
-            # by contract, like the single query's table)
-            if approx != "pq":
-                raise errors.InvalidArgumentError(
-                    f"unknown approx mode {approx!r}; supported: 'pq', 'hnsw'"
-                )
-            if self.params.metric != "euclidean":
-                raise errors.InvalidArgumentError(
-                    "approx='pq' supports the euclidean metric only"
-                )
-            from oasysdb_spark.index.pq import adc_table, load_codebooks_meta
-
-            meta = load_codebooks_meta(self)
-            if meta is None or "pq_code" not in recs.columns:
-                raise errors.InvalidArgumentError(
-                    "PQ tier not built: call oasysdb_spark.index.pq.build_pq first"
-                )
-            books, pq_residual, pq_rot = meta
-            adc_k = int(books.shape[1])
-            if qvec_rows is None:  # DataFrame input: one collect (tiny batch)
-                qvec_rows = [
-                    (r["query_id"], list(r["qvec"])) for r in queries.collect()
-                ]
-            if pq_residual:
-                # IVFADC: the ADC table depends on the probed cluster, so
-                # the probe selection happens driver-side (the query batch
-                # is already driver-side by contract) and the broadcast
-                # frame carries one row per (query, probed cluster) with
-                # that pair's table on q − centroid_c
-                if not self.is_indexed():
-                    raise errors.InvalidArgumentError(
-                        "residual PQ layout requires the IVF index it was "
-                        "built with: build_index before querying"
-                    )
-                import numpy as np
-
-                cents = self.centroid_rows()
-                pair_rows = []
-                # no centroids (e.g. every cluster emptied by deletes):
-                # zero probe rows → empty result, matching the single-
-                # query path's _probe_cluster_ids returning []
-                if cents:
-                    carr = np.asarray([v for _, v in cents], dtype=np.float64)
-                    cids = [int(c) for c, _ in cents]
-                    p = max(1, min(qp.probes, len(cents)))
-                    for qid, qv in qvec_rows:
-                        qarr = np.asarray(qv, dtype=np.float64)
-                        d = ((carr - qarr[None, :]) ** 2).sum(axis=1)
-                        order = np.argsort(
-                            np.where(np.isnan(d), np.inf, d), kind="stable"
-                        )[:p]
-                        for pos in order:
-                            rq = qarr - carr[int(pos)]
-                            if pq_rot is not None:
-                                rq = rq @ pq_rot
-                            pair_rows.append(
-                                (
-                                    qid,
-                                    qv,
-                                    cids[int(pos)],
-                                    [float(x) for x in adc_table(rq, books).ravel()],
-                                )
-                            )
-                queries = tiny_df(
-                    self.spark,
-                    pair_rows,
-                    "query_id bigint, qvec array<double>, "
-                    "cluster_id int, qtable array<double>",
-                )
-            else:
-                import numpy as np
-
-                def _rotq(qv):
-                    if pq_rot is None:
-                        return np.asarray(qv, dtype=np.float64)
-                    return np.asarray(qv, dtype=np.float64) @ pq_rot
-
-                tabled = [
-                    (qid, qv, [float(x) for x in adc_table(_rotq(qv), books).ravel()])
-                    for qid, qv in qvec_rows
-                ]
-                queries = tiny_df(
-                    self.spark,
-                    tabled,
-                    "query_id bigint, qvec array<double>, qtable array<double>",
-                )
-
-        if adc_k is not None and pq_residual:
-            # probing already resolved driver-side above
-            qside, join_on = queries, "cluster_id"
-        elif self.is_indexed():
-            from oasysdb_spark.index.ivf import topk_cluster_assigner
-
-            cents = self.centroid_rows()
-            assigner = topk_cluster_assigner(
-                self.spark,
-                [v for _, v in cents],
-                self.params.metric,
-                max(1, min(qp.probes, len(cents))),
-            )
-            # assigner emits positions into the centroid list; map them to
-            # (possibly non-contiguous) cluster ids in-plan
-            idmap = F.array(*[F.lit(int(c)) for c, _ in cents])
-            qcols = ["query_id", "qvec", "cluster_id"] + (
-                ["qtable"] if adc_k is not None else []
-            )
-            qprobe = (
-                queries.withColumn("__pos", F.explode(assigner(F.col("qvec"))))
-                .withColumn("cluster_id", F.element_at(idmap, F.col("__pos") + 1))
-                .select(*qcols)
-            )
-            qside, join_on = qprobe, "cluster_id"
+            batch = [(qid, list(q)) for qid, q in rows]
         else:
-            qside, join_on = queries, None
-
-        if adc_k is not None:
-            # code-only candidate stage (the batched analog of query_df's
-            # PQ path): the scan carries codes + filter maps, never raw
-            # vectors; per-query top-rerank by ADC, then ONE id-join
-            # fetches embeddings for the winners (Q×rerank rows —
-            # broadcast-sized for serving batches)
-            from oasysdb_spark.index.pq import adc_score_col
-
-            recs_codes = recs.drop("embedding")
-            cand = (
-                recs_codes.join(F.broadcast(qside), join_on)
-                if join_on
-                else recs_codes.crossJoin(F.broadcast(qside))
-            )
-            w_adc = Window.partitionBy("query_id").orderBy(
-                F.col("__adc").asc_nulls_last(), F.col("id")
-            )
-            cand = (
-                cand.where(pred)
-                .withColumn("__adc", adc_score_col(F.col("qtable"), adc_k))
-                .withColumn("__arn", F.row_number().over(w_adc))
-                .where(F.col("__arn") <= max(rerank, k))
-                .drop("__adc", "__arn", "qtable")
-            )
-            # rerank fetch joins on (cluster_id, id) when indexed so the
-            # broadcast side drives dynamic partition pruning — the same
-            # cluster pruning the single-query PQ path keeps on both scans
-            if join_on:
-                pairs = recs.select("cluster_id", "id", "embedding").join(
-                    F.broadcast(cand), ["cluster_id", "id"]
-                )
-            else:
-                pairs = recs.select("id", "embedding").join(F.broadcast(cand), "id")
-            pred = F.lit(True)  # already applied before the ADC cut
-        elif join_on:
-            pairs = recs.join(F.broadcast(qside), join_on)
-        else:
-            pairs = recs.crossJoin(F.broadcast(qside))
-
-        dist = distance_expr(self.params.metric, F.col("qvec"), F.col("embedding"))
-        out = pairs.withColumn("distance", dist)
-        if math.isfinite(qp.radius):
-            out = out.where(F.col("distance") <= F.lit(qp.radius))
-        else:
-            out = out.where(F.col("distance").isNotNull())
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("distance").asc_nulls_last(), F.col("id")
-        )
-        return (
-            out.where(pred)
-            .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= k)
-            .select(
-                "query_id",
-                "id",
-                "m_text",
-                "m_num",
-                "m_bool",
-                to_f32(F.col("distance")).alias("distance"),
-            )
-        )
+            batch = [(i, self._validate_dim(v)) for i, v in enumerate(queries)]
+        return self._serve(batch, k, filter, probes, radius, approx, rerank)
 
     def query_many(
         self,
@@ -2300,10 +1747,285 @@ class Database:
         ).collect()
         out: dict[int, list[dict[str, Any]]] = {}
         for r in sorted(rows, key=lambda r: (r["query_id"], r["distance"], r["id"])):
-            out.setdefault(r["query_id"], []).append(
-                {"id": r["id"], "metadata": merge_metadata(r), "distance": r["distance"]}
-            )
+            out.setdefault(r["query_id"], []).append(_hit(r))
         return out
+
+    # approx name -> (candidate generator, metrics it serves; None = all)
+    _TIERS = {
+        None: ("_exact_candidates", None),
+        "pq": ("_pq_candidates", ("euclidean",)),
+        "hnsw": ("_hnsw_candidates", ("euclidean", "cosine")),
+    }
+
+    def _serve(
+        self,
+        queries: "list[tuple[int, list[float]]]",
+        k: int,
+        filter: str | None,
+        probes: int | None,
+        radius: float | None,
+        approx: str | None,
+        rerank: int,
+    ) -> DataFrame:
+        """The ANN serving pipeline behind :meth:`query_df` and
+        :meth:`query_many_df` — the reference's one search path
+        (reference src/cores/index.rs:168-214, SURVEY.md §3.1) run
+        over a driver-side batch ``[(query_id, vector)]`` whose dimensions
+        the callers have checked. Returns ``(query_id, id, m_text, m_num,
+        m_bool, distance)``: per query, the ``k`` nearest rows by
+        ascending distance, ties by id, the vector excluded
+        (reference src/cores/index.rs:8-18).
+
+        1. Validate: ``k > 0`` (reference src/cores/database.rs:321-325),
+           the ``approx`` name, and the tier's metrics.
+        2. Candidates: the tier's generator (``_TIERS``). Each applies
+           the metadata filter BEFORE the top-k (pre-filtering,
+           reference src/cores/index.rs:195-199).
+
+           - exact (``approx=None``): the records of the probed clusters.
+             When indexed, every query is probed driver-side
+             (:meth:`_probe_cluster_ids`) and the records scan keeps the
+             union of the probes as a static ``cluster_id IN (...)``
+             partition filter: probing is partition pruning.
+           - ``"pq"`` (after ``index.pq.build_pq``; euclidean): ADC over
+             the 4-byte ``pq_code`` column of the probed records — that
+             scan never reads a raw vector — cut to the ``max(rerank,
+             k)`` best per query; a second scan, id-joined to those
+             winners, fetches their raw vectors. The residual (IVFADC)
+             layout scores each probed cluster with its own table on
+             ``q − centroid``; OPQ rotates the query first.
+           - ``"hnsw"`` (after ``index.hnsw.build_hnsw``; euclidean, and
+             cosine through a unit-normalized graph): each query beams
+             ``max(rerank, k)`` ids (ef_search) through the RESIDENT shard
+             graphs — decoded once per worker and graph version, so a
+             warm query reads no graph rows; ``probes`` is moot. A beam
+             cannot apply a predicate, so a filter post-filters on a
+             ladder: ef starts at ``4k`` and quadruples until every query
+             has ``k`` matches or ef covers the graph, where the answer
+             is EXACT — a selective filter degrades toward brute force
+             instead of under-filling k. A graph older than a record
+             mutation is refused as stale (``index.hnsw.load_hnsw_graph``).
+        3. Exact re-rank: the metric's distance on the raw vectors, so
+           every tier's values bit-match the exact tier on shared ids.
+        4. Radius: ``distance <= radius`` (default: the collection's
+           relevancy cutoff).
+        5. Top-k per query.
+
+        The batch size matters in one place, :meth:`_attach`, where the
+        query meets the records. One vector attaches as plan literals —
+        ``const_distance``, a literal ADC table, a literal ``query_id`` —
+        and its top-k is ``ORDER BY distance, id LIMIT k``, which
+        Catalyst plans as TakeOrderedAndProject, the distributed form of
+        the reference's bounded max-heap
+        (reference src/cores/index.rs:201-213). More vectors attach
+        as one broadcast query frame — joined on ``cluster_id`` (a row
+        per query and probed cluster), on ``query_id`` (HNSW candidates),
+        or crossed (unindexed) — and their top-k is a ``row_number``
+        window per query, so the whole batch is one job. The split
+        exists because joining the broadcast frame costs a lone query
+        more than the rest of its plan, and because past
+        ``spark.sql.optimizer.windowGroupLimitThreshold`` a window over a
+        single key sorts every candidate in one partition. Only the
+        residual PQ layout joins a frame for one vector: its ADC table
+        differs per probed cluster."""
+        if k <= 0:
+            raise errors.InvalidArgumentError(
+                "k must be > 0 (/root/reference/src/cores/database.rs:321-325)"
+            )
+        if approx not in self._TIERS:
+            raise errors.InvalidArgumentError(
+                f"unknown approx mode {approx!r}; supported: 'pq', 'hnsw'"
+            )
+        generate, metrics = self._TIERS[approx]
+        if metrics is not None and self.params.metric not in metrics:
+            raise errors.InvalidArgumentError(
+                f"approx={approx!r} supports the {' and '.join(metrics)} "
+                f"metric{'s' if len(metrics) > 1 else ''} only"
+            )
+        qp = QueryParameters(
+            probes=probes if probes is not None else 32,
+            radius=radius if radius is not None else self._default_radius(),
+        )
+        pred = compile_filter(filter, MapLayout())
+        batch = [(qid, qv, [None]) for qid, qv in queries]
+        att = getattr(self, generate)(
+            batch, k, pred, qp.probes, rerank, filter is not None
+        )
+        out = att.df.withColumn("distance", att.distance)
+        if math.isfinite(qp.radius):
+            out = out.where(F.col("distance") <= F.lit(qp.radius))
+        else:
+            out = out.where(F.col("distance").isNotNull())
+        return att.topk(out, k, "distance").select(
+            att.query_id.alias("query_id"),
+            "id",
+            "m_text",
+            "m_num",
+            "m_bool",
+            to_f32(F.col("distance")).alias("distance"),
+        )
+
+    def _exact_candidates(self, batch, k, pred, probes, rerank, filtered):
+        recs, batch, on = self._probed(batch, probes)
+        return self._attach(recs.where(pred), batch, on)
+
+    def _pq_candidates(self, batch, k, pred, probes, rerank, filtered):
+        import numpy as np
+
+        from oasysdb_spark.index.pq import adc_score_col, adc_table, load_codebooks_meta
+
+        recs, batch, on = self._probed(batch, probes)
+        meta = load_codebooks_meta(self)
+        if meta is None or "pq_code" not in recs.columns:
+            raise errors.InvalidArgumentError(
+                "PQ tier not built: call oasysdb_spark.index.pq.build_pq first"
+            )
+        books, residual, rot = meta
+        if residual and on is None:
+            raise errors.InvalidArgumentError(
+                "residual PQ layout requires the IVF index it was "
+                "built with: build_index before querying"
+            )
+        cents = {
+            c: np.asarray(v, dtype=np.float64) for c, v in self.centroid_rows()
+        } if residual else {}
+
+        def table(qv, cluster_id):
+            q = np.asarray(qv, dtype=np.float64)
+            if residual:
+                q = q - cents[cluster_id]
+            if rot is not None:
+                q = q @ rot
+            return [float(x) for x in adc_table(q, books).ravel()]
+
+        att = self._attach(
+            recs.drop("embedding").where(pred), batch, on, table, per_cluster=residual
+        )
+        scored = att.df.withColumn("__adc", adc_score_col(att.qtable, int(books.shape[1])))
+        cand = att.topk(scored, max(rerank, k), "__adc").drop("__adc", "qtable")
+        # only the winners' raw vectors are read (broadcast: at most
+        # max(rerank, k) rows per query by construction)
+        return att._replace(df=recs.select("id", "embedding").join(F.broadcast(cand), "id"))
+
+    def _hnsw_candidates(self, batch, k, pred, probes, rerank, filtered):
+        from oasysdb_spark.index.hnsw import (
+            broadcast_queries,
+            hnsw_serving_state,
+            resident_candidates,
+        )
+
+        gpath, gshards, gtoken, gmeta = hnsw_serving_state(self)
+        if gmeta.get("metric", "euclidean") != self.params.metric:
+            raise errors.InvalidArgumentError(
+                "HNSW graph was built for metric "
+                f"{gmeta.get('metric', 'euclidean')!r}; run build_hnsw "
+                f"to rebuild it for {self.params.metric!r}"
+            )
+        recs = self.records_df()
+        # cosine beams the NORMALIZED query through the unit-vector graph
+        # (euclidean order ≡ cosine order on unit vectors); the exact
+        # re-rank still runs the true metric on the raw records
+        beam = []
+        for qid, qv, _ in batch:
+            qn = math.sqrt(sum(x * x for x in qv)) if self.params.metric == "cosine" else 0.0
+            beam.append((qid, [float(x) / qn for x in qv] if qn > 0 else qv))
+        # tombstoned ids (tombstone_hnsw) drop at the records join;
+        # widening ef by their count keeps k fillable even if every dead
+        # id lands in the beam
+        n_tomb = len(gmeta.get("tombstones", []))
+        ef = max(rerank, k) + n_tomb
+        if filtered:
+            ef = max(ef, 4 * k)
+            # the exhaustive-exact bound counts GRAPH nodes — live records
+            # plus tombstoned nodes still in the graph; capping at the live
+            # count could truncate the last rung below a shard's node count
+            # and break the exhaustive-exact guarantee. Under cosine,
+            # zero-norm rows never enter the graph, so this over-counts:
+            # one extra rung, never a short one
+            n_total = recs.count() + n_tomb
+        # ONE broadcast per batch, shared by every ladder rung; the
+        # previous batch's broadcast is unpersisted so executor copies
+        # do not pile up over a long serving session
+        qb = broadcast_queries(self.spark, beam)
+        self._track_serving_broadcast(qb)
+        while True:
+            cand = resident_candidates(
+                self.spark, gpath, gshards, gtoken, ef_search=ef, id_type="string", qb=qb
+            ).select("query_id", F.col("vec_id").alias("id"))
+            df = recs.join(F.broadcast(cand), "id")
+            if not filtered:
+                break
+            df = df.where(pred)
+            if ef >= n_total:
+                break
+            got = dict(df.groupBy("query_id").count().collect())
+            if all(got.get(qid, 0) >= k for qid, _, _ in batch):
+                break
+            ef = min(n_total, ef * 4)
+        return self._attach(df, batch, "query_id")
+
+    def _probed(self, batch, probes):
+        """The probe stage: each query keeps its ``probes`` nearest
+        clusters, and the records scan keeps their union as a static
+        ``cluster_id IN (...)`` partition filter. Returns the records,
+        the batch with its cluster lists, and the column the query frame
+        joins on (None when unindexed)."""
+        recs = self.records_df()
+        # is_indexed() on the frame already read (it would read it again)
+        if not (self.centroids.exists() and "cluster_id" in recs.columns):
+            return recs, batch, None
+        batch = [(qid, qv, self._probe_cluster_ids(qv, probes)) for qid, qv, _ in batch]
+        union = list(dict.fromkeys(c for _, _, cids in batch for c in cids))
+        return recs.where(F.col("cluster_id").isin(union)), batch, "cluster_id"
+
+    def _attach(self, df, batch, on, table=None, per_cluster=False) -> "_Attached":
+        """Attach the query batch to candidate rows — the one place the
+        batch size matters (see :meth:`_serve`). ``batch`` rows are
+        ``(query_id, vector, cluster_ids)``; ``on`` is the column the
+        query frame joins on (None crosses); ``table(vector, cluster_id)``
+        builds a flat ADC table, one per probed cluster when
+        ``per_cluster``."""
+        if len(batch) == 1:
+            qid, qv, cids = batch[0]
+            qtable = None
+            if per_cluster:
+                tables = tiny_df(
+                    self.spark,
+                    [(c, table(qv, c)) for c in cids],
+                    "cluster_id int, qtable array<double>",
+                )
+                df = df.join(F.broadcast(tables), "cluster_id")
+                qtable = F.col("qtable")
+            elif table is not None:
+                qtable = F.array(*[F.lit(x) for x in table(qv, None)])
+            return _Attached(
+                df,
+                const_distance(self.params.metric, qv),
+                qtable,
+                F.lit(qid).cast("bigint"),
+                _limit_topk,
+            )
+        rows = []
+        for qid, qv, cids in batch:
+            flat = table(qv, None) if table is not None and not per_cluster else None
+            rows += [(qid, qv, c, table(qv, c) if per_cluster else flat) for c in cids]
+        cols = ["query_id", "qvec"] + (["cluster_id"] if on == "cluster_id" else [])
+        cols += ["qtable"] if table is not None else []
+        # one slice, not defaultParallelism pickled slices
+        frame = F.broadcast(
+            tiny_df(
+                self.spark,
+                rows,
+                "query_id bigint, qvec array<double>, cluster_id int, qtable array<double>",
+            ).select(*cols)
+        )
+        return _Attached(
+            df.join(frame, on) if on else df.crossJoin(frame),
+            distance_expr(self.params.metric, F.col("qvec"), F.col("embedding")),
+            F.col("qtable") if table is not None else None,
+            F.col("query_id"),
+            _window_topk,
+        )
 
     # ------------------------------------------------------------------
     # centroid helpers (driver-side: the centroids table is tiny by design)

@@ -358,11 +358,10 @@ def ivf_knn(
     centroids signatures guard staleness; every action still scans the
     index parquet."""
     import os
-    import tempfile
 
     from oasysdb_spark.sources.tables import prepared_plan
 
-    work_dir = work_dir or tempfile.mkdtemp(prefix="oasys_ivf_")
+    work_dir = work_dir or _default_work_dir(("ivf", sf_dir), "oasys_ivf_")
     return prepared_plan(
         spark,
         "ivf_knn",
@@ -624,14 +623,11 @@ def lsh_knn_indexed(
     repeat query over an unchanged layout reuses the constructed frame
     (~0.26 s of per-table schema inference + py4j construction, measured
     warm). The layout directory's signature guards staleness."""
-    import tempfile
-
     from oasysdb_spark.sources.tables import prepared_plan
 
     if work_dir is None:
-        key = (sf_dir, num_planes, scale, num_tables)
-        work_dir = _LSH_LAYOUT_CACHE.setdefault(
-            key, tempfile.mkdtemp(prefix="oasys_lsh_")
+        work_dir = _default_work_dir(
+            (sf_dir, num_planes, scale, num_tables), "oasys_lsh_"
         )
     return prepared_plan(
         spark,
@@ -657,7 +653,6 @@ def _lsh_knn_indexed_build(
     work_dir: str,
 ) -> DataFrame:
     import os
-    import tempfile
 
     embs = load_embeddings(spark, sf_dir)
     qvec = query_embedding(spark, sf_dir, query_vec_id)
@@ -690,7 +685,20 @@ def _lsh_knn_indexed_build(
     )
 
 
+# default work directories of the indexed kNN operators (LSH layouts
+# and the IVF index), one per layout key for the life of the process
 _LSH_LAYOUT_CACHE: dict = {}
+
+
+def _default_work_dir(key, prefix: str) -> str:
+    """The cached work directory for ``key``, created on a miss only
+    (``setdefault(key, mkdtemp())`` would create and leak one per call)."""
+    work_dir = _LSH_LAYOUT_CACHE.get(key)
+    if work_dir is None:
+        import tempfile
+
+        work_dir = _LSH_LAYOUT_CACHE[key] = tempfile.mkdtemp(prefix=prefix)
+    return work_dir
 
 
 def sq_reconstruction_stats(

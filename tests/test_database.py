@@ -488,10 +488,23 @@ def test_query_many_df_input_validates_dimension(spark, tmp_path):
     )
     with pytest.raises(InvalidArgumentError, match="dimension"):
         db.query_many(bad, k=1)
+    # each defect alone, and a one-row batch, is refused too
+    for rows in ([(0, [1.0] * 4), (1, [1.0] * 5)], [(0, [1.0] * 4), (1, None)],
+                 [(0, None)], [(0, [1.0] * 3)]):
+        with pytest.raises(InvalidArgumentError, match="dimension"):
+            db.query_many(
+                spark.createDataFrame(rows, "query_id bigint, qvec array<double>"), k=1
+            )
     ok = spark.createDataFrame(
         [(0, [1.0, 2.0, 3.0, 4.0])], "query_id bigint, qvec array<double>"
     )
     assert len(db.query_many(ok, k=1)) == 1
+    # a DataFrame batch serves the same lists as the list form
+    db.insert([4.0, 3.0, 2.0, 1.0], record_id="b")
+    db.insert([0.0, 0.0, 1.0, 0.0], record_id="c")
+    qs = [[1.0, 2.0, 3.0, 4.5], [0.0, 0.5, 1.0, 0.0], [4.0, 4.0, 1.0, 1.0]]
+    qdf = spark.createDataFrame(list(enumerate(qs)), "query_id bigint, qvec array<float>")
+    assert db.query_many(qdf, k=2) == db.query_many(qs, k=2)
 
 
 def test_snapshot_diff(spark, tmp_path, capsys):
@@ -612,6 +625,9 @@ def test_hnsw_tier_lifecycle(spark, tmp_path):
         assert [(r["id"], r["distance"]) for r in batched[qi]] == [
             (r["id"], r["distance"]) for r in single
         ]
+    # a DataFrame batch serves the same lists as the list form
+    qdf = spark.createDataFrame(list(enumerate(qs)), "query_id bigint, qvec array<float>")
+    assert db.query_many(qdf, k=5, approx="hnsw") == batched
 
     # mutation → stale graph refused with the rebuild hint
     db.insert([500.0] * DIM, {"number": 1500.0})

@@ -82,10 +82,11 @@ def test_prefilter_on_indexed_path(indexed_db):
     assert all(r["metadata"]["number"] > 1050 for r in res)
 
 
-def test_query_many_indexed_agrees_with_single(indexed_db):
+def test_query_many_indexed_agrees_with_single(indexed_db, tmp_path):
     """Batched multi-probe ANN through the index: every query's hit list
     equals its standalone query() call, at full probing (exact) and at
-    tight probes with a filter (the approximate scale path)."""
+    tight probes with a filter (the approximate scale path), under the
+    euclidean and the cosine metric."""
     n_clusters = len(indexed_db.centroid_rows())
     qs = [[5.0] * DIM, [100.0] * DIM, [333.0] * DIM]
     batched = indexed_db.query_many(qs, k=7, probes=n_clusters)
@@ -96,6 +97,27 @@ def test_query_many_indexed_agrees_with_single(indexed_db):
         assert batched.get(i, []) == indexed_db.query(
             q, k=5, filter="number > 1050", probes=2
         )
+
+    # cosine: probing ranks centroids by angle for the batch as well
+    import math
+
+    spark = indexed_db.spark
+    cos = Database.configure(
+        spark, str(tmp_path / "ivf_cos"), dimension=DIM, metric="cosine", density=32
+    )
+    rows = [
+        (f"c{i:05d}", [math.cos(0.05 * i + j) * (1 + i % 7) for j in range(DIM)],
+         {}, {"number": 1000.0 + i}, {})
+        for i in range(N)
+    ]
+    cos.insert_batch(spark.createDataFrame(rows, RECORD_SCHEMA))
+    build_index(cos, seed=42)
+    cqs = [[math.cos(0.05 * i + j) for j in range(DIM)] for i in (3, 90, 251)]
+    for kw in ({"probes": 2}, {"probes": 3, "filter": "number > 1100"}):
+        batched = cos.query_many(cqs, k=6, **kw)
+        for i, q in enumerate(cqs):
+            assert batched.get(i, []) == cos.query(q, k=6, **kw)
+            assert len(batched[i]) == 6
 
 
 def test_partition_pruning_in_plan(indexed_db):
@@ -216,6 +238,14 @@ def test_probe_scan_partition_prunes(indexed_db):
     df = indexed_db.query_df([5.0] * DIM, k=5, probes=2)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
+    pf = plan.split("PartitionFilters")[1][:300]
+    assert "cluster_id" in pf and "IN (" in pf.upper()
+    # one vector attaches as literals: a bounded top-k heap, no query frame
+    assert "TakeOrderedAndProject" in plan
+    assert "BroadcastHashJoin" not in plan
+    # a batch probes driver-side too: the scan carries the static union
+    many = indexed_db.query_many_df([[5.0] * DIM, [250.0] * DIM], k=5, probes=2)
+    plan = many._jdf.queryExecution().executedPlan().toString()
     pf = plan.split("PartitionFilters")[1][:300]
     assert "cluster_id" in pf and "IN (" in pf.upper()
 
@@ -388,6 +418,9 @@ def test_query_many_pq_agrees_with_single_pq_and_exact(spark, tmp_path):
     for i, q in enumerate(qs):
         assert batched[i] == db.query(q, k=5, probes=3, approx="pq", rerank=200)
         assert batched[i] == db.query(q, k=5, probes=3)  # full rerank == exact
+    # a DataFrame batch serves the same lists as the list form
+    qdf = spark.createDataFrame(list(enumerate(qs)), "query_id bigint, qvec array<float>")
+    assert db.query_many(qdf, k=5, probes=3, approx="pq", rerank=200) == batched
 
     # tight rerank + filter still agrees with the single-query path
     batched = db.query_many(

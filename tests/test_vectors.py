@@ -144,6 +144,33 @@ def test_lsh_indexed_prunes_partitions_and_matches(spark, sf_dir, tmp_path):
     assert indexed == recompute
 
 
+def test_default_work_dirs_are_created_once(spark, sf_dir, tmp_path, monkeypatch):
+    """Default-argument calls of the indexed kNN operators reuse ONE
+    work directory per layout: repeated calls keep the temp-dir count
+    flat instead of leaking a fresh directory each time."""
+    import os
+    import tempfile
+
+    from oasysdb_spark.operators import vectorops as vec
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    monkeypatch.setattr(vec, "_LSH_LAYOUT_CACHE", {})
+
+    def work_dirs():
+        return sorted(d for d in os.listdir(tmp) if d.startswith("oasys_"))
+
+    vec.lsh_knn_indexed(spark, sf_dir)
+    vec.ivf_knn(spark, sf_dir)
+    first = work_dirs()
+    assert len(first) == 2
+    for _ in range(3):
+        vec.lsh_knn_indexed(spark, sf_dir)
+        vec.ivf_knn(spark, sf_dir, k=5)
+    assert work_dirs() == first
+
+
 def test_lsh_multi_table_recall_improves(spark, sf_dir, tmp_path):
     """Salted plane tables union independent candidate sets: recall@10 vs
     brute force must not drop, and the candidate pool strictly widens."""
