@@ -46,7 +46,12 @@ from oasysdb_spark import errors
 from oasysdb_spark.core.config import Parameters, QueryParameters, atomic_write_text
 from oasysdb_spark.core.tables import VersionedTable
 from oasysdb_spark.filters import MapLayout, compile_filter
-from oasysdb_spark.functions.vectors import const_distance, distance_expr, to_f32
+from oasysdb_spark.functions.vectors import (
+    const_array,
+    const_distance,
+    distance_expr,
+    to_f32,
+)
 from oasysdb_spark.session import tiny_df
 
 RECORD_SCHEMA = T.StructType(
@@ -1997,7 +2002,7 @@ class Database:
                 df = df.join(F.broadcast(tables), "cluster_id")
                 qtable = F.col("qtable")
             elif table is not None:
-                qtable = F.array(*[F.lit(x) for x in table(qv, None)])
+                qtable = const_array(table(qv, None))
             return _Attached(
                 df,
                 const_distance(self.params.metric, qv),

@@ -22,6 +22,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from oasysdb_spark.core.config import atomic_write_text
+from oasysdb_spark.sources.tables import read_parquet_cached
 
 _LATEST = "_LATEST"
 
@@ -47,7 +48,14 @@ class VersionedTable:
         return os.path.join(self.root, v)
 
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.current_path())
+        """The current version as a DataFrame. ``spark.read.parquet``
+        infers the schema from the parquet footers, which is a Spark
+        job (~100 ms) per read, so the resolved frame goes through the
+        signature-guarded read memo under this table's root: a repeat
+        read of an unchanged version reuses it, while a pointer move,
+        an append or another handle's write changes the file signature
+        and re-reads once, replacing the table's single entry."""
+        return read_parquet_cached(spark, self.current_path(), slot=self.root)
 
     def versions(self) -> list[str]:
         """All retained version names, oldest first (bounded by the
@@ -63,7 +71,9 @@ class VersionedTable:
         """Time travel: read a specific retained version. Versions are
         immutable directories, so this is the same snapshot-isolation
         guarantee readers of the current pointer get, pointed at history
-        (what Delta/Iceberg call ``VERSION AS OF``)."""
+        (what Delta/Iceberg call ``VERSION AS OF``). Always a fresh
+        read, so diffing a version against the current one never
+        self-joins one frame object."""
         path = os.path.join(self.root, version)
         if not os.path.isdir(path):
             raise FileNotFoundError(

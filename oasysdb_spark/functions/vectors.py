@@ -151,8 +151,18 @@ def const_distance(metric: str, vals, col: str = "embedding") -> Column:
     d = distance_expr_const(metric, vals, col)
     if d is not None:
         return d
-    q = F.array(*[F.lit(float(x)) for x in vals])
-    return distance_expr(metric, q, F.col(col))
+    return distance_expr(metric, const_array(vals), F.col(col))
+
+
+def const_array(vals) -> Column:
+    """``array<double>`` literal of driver-side values as ONE ``F.expr``
+    (a 128-entry PQ lookup table is otherwise 128 py4j ``lit`` calls),
+    falling back to the Column builders when a value is non-finite —
+    identical analyzed expression either way."""
+    arr = _sql_double_array(vals)
+    if arr is not None:
+        return F.expr(arr)
+    return F.array(*[F.lit(float(x)) for x in vals])
 
 
 # User-extensible metric registry — the UDF surface the reference lacks

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from oasysdb_spark.errors import InvalidArgumentError
+from oasysdb_spark.functions.vectors import const_array, const_distance
 from oasysdb_spark.session import tiny_df
 
 
@@ -256,7 +257,7 @@ def adc_score_expr(table: np.ndarray):
     a literal array and sum ``m`` lookups via aggregate(zip_with) —
     whole-stage codegen, no Python, no raw vectors."""
     m, k = table.shape
-    flat = F.array(*[F.lit(float(v)) for v in table.ravel()])
+    flat = const_array(table.ravel())
     idx = F.sequence(F.lit(0), F.lit(m - 1))
     partials = F.zip_with(
         F.col("pq_code"),
@@ -486,7 +487,6 @@ def pq_knn(
 
     Pass ``codes_df``/``codebooks`` to reuse a prebuilt encode (the
     steady-state shape: encode once at ingest, query many times)."""
-    from oasysdb_spark.functions.vectors import const_distance
     from oasysdb_spark.operators.vectorops import load_embeddings, query_embedding, round_dist
 
     embs = load_embeddings(spark, sf_dir)
@@ -536,7 +536,6 @@ def opq_knn(
     data (the fixture is isotropic — PQ's worst case and OPQ's
     no-op case — so the recall gate reuses PQ's bar and the
     MSE-improvement gate runs on correlated synthetic data)."""
-    from oasysdb_spark.functions.vectors import const_distance
     from oasysdb_spark.operators.vectorops import load_embeddings, query_embedding, round_dist
 
     embs = load_embeddings(spark, sf_dir)
@@ -656,7 +655,6 @@ def ivfpq_knn(
     Pass ``codes_df``/``centroids``/``codebooks`` from
     :func:`build_ivfpq` to reuse a prebuilt layout (the steady-state
     serving shape)."""
-    from oasysdb_spark.functions.vectors import const_distance
     from oasysdb_spark.operators.vectorops import (
         load_embeddings,
         query_embedding,

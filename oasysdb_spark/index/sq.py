@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from oasysdb_spark.errors import InvalidArgumentError
+from oasysdb_spark.functions.vectors import const_array, const_distance
 
 
 def fit_sq(df: DataFrame, col: str = "embedding") -> np.ndarray:
@@ -56,19 +57,15 @@ def fit_sq(df: DataFrame, col: str = "embedding") -> np.ndarray:
     return np.stack([mins, steps])
 
 
-def _lit_arr(vals) -> "F.Column":
-    return F.array(*[F.lit(float(v)) for v in vals])
-
-
 def encode_sq(df: DataFrame, model: np.ndarray, col: str = "embedding") -> DataFrame:
     """Add ``sq_code`` (array<int>, values 0..255): row-local expression
     ``clamp(round((x − min)/step))``; constant dimensions encode 0."""
     mins, steps = model
     inv = np.where(steps > 0, 1.0 / np.where(steps > 0, steps, 1.0), 0.0)
-    shifted = F.zip_with(F.col(col), _lit_arr(mins), lambda x, mn: x - mn)
+    shifted = F.zip_with(F.col(col), const_array(mins), lambda x, mn: x - mn)
     codes = F.zip_with(
         shifted,
-        _lit_arr(inv),
+        const_array(inv),
         lambda d, iv: F.least(
             F.lit(255), F.greatest(F.lit(0), F.round(d * iv).cast("int"))
         ),
@@ -92,13 +89,13 @@ def sq_score_expr(query, model: np.ndarray):
     b = 2.0 * qp * steps
     c = steps * steps
     lin = F.aggregate(
-        F.zip_with(F.col("sq_code"), _lit_arr(b), lambda code, bb: code * bb),
+        F.zip_with(F.col("sq_code"), const_array(b), lambda code, bb: code * bb),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
     quad = F.aggregate(
         F.zip_with(
-            F.col("sq_code"), _lit_arr(c), lambda code, cc: code * code * cc
+            F.col("sq_code"), const_array(c), lambda code, cc: code * code * cc
         ),
         F.lit(0.0),
         lambda acc, v: acc + v,
@@ -129,7 +126,6 @@ def sq_knn(
 
     Pass ``codes_df``/``model`` to reuse a prebuilt encode (steady
     state: encode once at ingest, query many times)."""
-    from oasysdb_spark.functions.vectors import const_distance
     from oasysdb_spark.operators.vectorops import load_embeddings, query_embedding, round_dist
 
     embs = load_embeddings(spark, sf_dir)

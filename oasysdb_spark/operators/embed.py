@@ -198,7 +198,7 @@ def corpus_text_search(
     once and indexed (IVF/LSH layouts) instead of recomputed."""
     import re
 
-    from oasysdb_spark.functions.vectors import cosine_distance
+    from oasysdb_spark.functions.vectors import const_array, cosine_distance
     from oasysdb_spark.operators.vectorops import round_dist
 
     docs = read_parquet_cached(spark, f"{sf_dir}/documents.parquet")
@@ -207,7 +207,7 @@ def corpus_text_search(
     )
     qtoks = [w for w in re.split("[^a-z0-9]+", query_text.lower()) if w]
     qv = _hash_embed_py(qtoks, dim)
-    q = F.array(*[F.lit(float(x)) for x in qv])
+    q = const_array(qv)
     dist = cosine_distance(q, F.col("emb"))
     return (
         embedded.select("doc_id", round_dist(dist).alias("distance"))

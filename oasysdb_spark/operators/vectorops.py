@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from oasysdb_spark.sources.tables import read_parquet_cached
 
 from oasysdb_spark.functions.vectors import (
+    const_array,
     const_distance,
     distance_expr,
     sqeuclidean,
@@ -148,9 +149,7 @@ def _query_vec_list(
 def _query_vec_col(spark: SparkSession, sf_dir: str, query_vec_id: int):
     """The query vector as an array literal (fetched once, driver-side —
     the moral equivalent of the reference receiving it in the RPC)."""
-    return F.array(
-        *[F.lit(float(x)) for x in _query_vec_list(spark, sf_dir, query_vec_id)]
-    )
+    return const_array(_query_vec_list(spark, sf_dir, query_vec_id))
 
 
 def knn_bruteforce(

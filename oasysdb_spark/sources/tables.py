@@ -17,49 +17,55 @@ NANO_TS_TABLES = {"events": "ts"}
 
 
 _READ_MEMO: dict = {}
+_PLAN_MEMO: dict = {}
+# FIFO bound on both memos (r16 review): parameter-keyed serving
+# entries (ivf/lsh knn) would otherwise pin one analyzed plan per
+# distinct query forever in a many-distinct-query serving session, and
+# a process that opens many versioned tables would pin one read each.
+_PLAN_MEMO_MAX = 64
 
 
-def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet_cached(
+    spark: SparkSession, path: str, slot: "str | None" = None
+) -> DataFrame:
     """Memoized ``spark.read.parquet``: every call re-infers the schema
-    from parquet footers, ~90-115 ms of driver time (r15 gap profiling
-    — the q-series queries load 5-6 tables each, so this was the single
-    largest per-query driver cost in the bench). DataFrames are
-    immutable and reusable within a SparkContext, so the loaded frame
-    is memoized per (application id, mtime_ns+size file signature): a
-    rewritten or appended path changes the signature and re-reads;
-    non-local paths skip memoization. This caches a PLAN, never data —
-    every action over the frame still scans the parquet inputs."""
+    from parquet footers, one Spark job and ~90-115 ms of driver time
+    (r15 gap profiling — the q-series queries load 5-6 tables each, so
+    this was the single largest per-query driver cost in the bench).
+    DataFrames are immutable and reusable within a session, so the
+    loaded frame is memoized under (session, ``slot``, nanosAsLong)
+    with the path's mtime_ns+size file signature stored beside it: a
+    rewritten or appended path changes the signature, so the next read
+    re-infers once and REPLACES the entry. ``slot`` defaults to the
+    path; a caller whose path moves (a versioned table's pointer)
+    passes a stable name instead, so each new version replaces the one
+    entry rather than adding one per version. Entries are evicted FIFO
+    past ``_PLAN_MEMO_MAX``; non-local paths skip memoization.
+
+    This caches a PLAN, never data — every action over the frame still
+    scans the parquet files it resolved."""
     sig = _local_files_sig(path)
     if sig is None:
         return spark.read.parquet(path)
     # keyed by the SESSION object, not the applicationId (r15 review: a
     # newSession() shares the appId but carries its own confs, and a
-    # frame is bound to the session that created it), and by abspath
-    # with the signature stored in the VALUE — a rewritten path
-    # replaces its entry instead of accumulating one per version.
-    # The one READ-time conf a caller flips per table
-    # (nanosAsLong for the events fixture) is part of the key (r16,
-    # r15 ADVICE): whichever caller reads a conf-sensitive path first
-    # must not pin its frame shape for every later caller.
-    try:
-        nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    except Exception:
-        nanos = None
-    key = (spark, sig[0], nanos)
+    # frame is bound to the session that created it). The one READ-time
+    # conf a caller flips per table (nanosAsLong for the events fixture)
+    # is part of the key (r16, r15 ADVICE): whichever caller reads a
+    # conf-sensitive path first must not pin its frame shape for every
+    # later caller.
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
+    key = (spark, slot or sig[0], nanos)
     hit = _READ_MEMO.get(key)
     if hit is not None and hit[0] == sig:
         return hit[1]
     _purge_stopped_sessions()
     df = spark.read.parquet(path)
+    _READ_MEMO.pop(key, None)
+    if len(_READ_MEMO) >= _PLAN_MEMO_MAX:
+        _READ_MEMO.pop(next(iter(_READ_MEMO)))
     _READ_MEMO[key] = (sig, df)
     return df
-
-
-_PLAN_MEMO: dict = {}
-# FIFO bound (r16 review): parameter-keyed serving entries (ivf/lsh knn)
-# would otherwise pin one analyzed plan per distinct query forever in a
-# many-distinct-query serving session.
-_PLAN_MEMO_MAX = 64
 
 
 def prepared_plan(spark, name, params, sig_paths, builder):
@@ -151,21 +157,27 @@ def prepared(name: str):
     return deco
 
 
+def _session_stopped(s) -> bool:
+    try:
+        jsc = s._sc._jsc
+    except AttributeError:
+        # Spark Connect sessions have no JVM context to probe: keep
+        # their entries rather than purge them on every miss
+        return False
+    return jsc is None or jsc.sc().isStopped()
+
+
 def _purge_stopped_sessions() -> None:
     """Drop memo buckets owned by stopped sessions (r16, r15 ADVICE:
     the memo held strong references to stopped sessions' JVM-backed
     plans forever in long-lived multi-session processes). Runs on memo
-    misses only — the memo is small (one entry per fixture table per
-    live session), so the sweep is a few attribute probes."""
-    for memo in (_READ_MEMO, _PLAN_MEMO):
-        for key in list(memo):
-            s = key[0]
-            try:
-                dead = s._sc._jsc is None or s._sc._jsc.sc().isStopped()
-            except Exception:
-                dead = True
-            if dead:
-                memo.pop(key, None)
+    misses only, and probes each distinct session once."""
+    memos = (_READ_MEMO, _PLAN_MEMO)
+    sessions = {id(k[0]): k[0] for memo in memos for k in memo}
+    dead = {i for i, s in sessions.items() if _session_stopped(s)}
+    for memo in memos:
+        for key in [k for k in memo if id(k[0]) in dead]:
+            del memo[key]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

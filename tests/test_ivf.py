@@ -395,6 +395,13 @@ def test_pq_codebook_cache_invalidated_across_handles(spark, tmp_path):
     late = db2.records_df().where("id = 'late'").first()
     assert late["pq_code"] is not None and len(late["pq_code"]) == 8
 
+    # an in-place append through one handle is visible to the other
+    # handle's next read (the file signature changed under its memo)
+    assert db2.count() == 65
+    db1.insert([100.0] * 8, record_id="later")
+    assert db2.count() == 66
+    assert db2.query([100.0] * 8, k=1)[0]["id"] == "later"
+
 
 def test_query_many_pq_agrees_with_single_pq_and_exact(spark, tmp_path):
     """Batched PQ: each query's list equals its standalone

@@ -90,6 +90,20 @@ def test_versioned_table_time_travel_and_compaction(spark, tmp_path):
     # the row multiset survives compaction
     assert t.read(spark).agg(F.sum("v")).first()[0] == sum(2 * i for i in range(150))
 
+    # a repeat read of an unchanged version reuses the resolved frame:
+    # no schema-inference job
+    sc = spark.sparkContext
+    sc.setJobGroup("vt_repeat_read", "repeat read starts no job")
+    try:
+        t.read(spark)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("vt_repeat_read")) == []
+    # appends and the compaction replaced the table's one memo entry
+    from oasysdb_spark.sources.tables import _READ_MEMO
+
+    assert sum(1 for k in _READ_MEMO if k[0] is spark and k[1] == t.root) == 1
+
     # time travel: v1 (pre-compaction, incl. its appends) is still retained
     assert v1 in t.versions()
     assert t.read_version(spark, v1).count() == 150  # appends went into v1
